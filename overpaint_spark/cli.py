@@ -507,7 +507,7 @@ def _run_stream_gate(
     import os
 
     from overpaint_spark.sources.catalog import load_table
-    from overpaint_spark.streaming.sink import read_sink
+    from overpaint_spark.streaming.sink import await_available_now, read_sink
 
     try:
         if not os.path.isdir(source):
@@ -623,11 +623,7 @@ def _run_stream_gate(
             sq = write_ann_ingest_stream(
                 stream, out_dir, ckpt, trigger_available_now=True
             )
-        if not sq.awaitTermination(3600):
-            sq.stop()
-            raise RuntimeError(
-                "availableNow trigger did not complete within 3600 s"
-            )
+        await_available_now(sq, 3600)
         if gate == "cdc":
             n = spark.read.parquet(out_dir).count()
             sys.stdout.write(

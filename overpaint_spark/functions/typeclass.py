@@ -49,11 +49,6 @@ def is_temporal(dt: T.DataType) -> bool:
     )
 
 
-def is_profiled(dt: T.DataType) -> bool:
-    """Columns that get a range or values cell at all."""
-    return is_numeric(dt) or is_boolean(dt) or is_temporal(dt)
-
-
 # Spark simpleString -> humanized name (<= 8 chars), per the reference map
 # at listTables.tsx:83-120 translated through the SURVEY §1.2 type table.
 _HUMAN_MAP: dict[str, str] = {

@@ -88,20 +88,6 @@ def column_kind(dt: T.DataType) -> str:
     return "other"
 
 
-def _sketch_input(c, dt: T.DataType):
-    """HLL input: the value's 64-bit xxhash (any type, JVM codegen) —
-    ~6× cheaper than casting to string, and a 64-bit hash adds no
-    measurable error below ~billions of distincts. NULL-guarded because
-    ``xxhash64(NULL)`` is the seed constant, not NULL — without the guard
-    every null column value would count as one extra distinct."""
-    if isinstance(dt, (T.LongType, T.IntegerType, T.ShortType, T.ByteType, T.StringType)):
-        return c  # natively supported sketch inputs — no hashing needed
-    if typeclass.is_time(dt):
-        # xxhash64 rejects TimeType (Spark 4.1) — hash the string form
-        return F.when(c.isNotNull(), F.xxhash64(c.cast("string")))
-    return F.when(c.isNotNull(), F.xxhash64(c))
-
-
 def _strip_scheme(p: str) -> str:
     """``file:/x`` / ``file:///x`` → ``/x`` (Hadoop URI → local path).
 

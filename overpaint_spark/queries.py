@@ -20,6 +20,12 @@ omit the oracle → the driver records a weaker rows-only check.
 
 from __future__ import annotations
 
+import atexit
+import itertools
+import os
+import shutil
+import tempfile
+import threading
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -2176,6 +2182,29 @@ def q_retrieval_rrf_queries(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hybrid_rrf_queries(d, e, queries, k=25, depth=_RRF_DEPTH)
 
 
+# --- process-wide scratch root ------------------------------------------------
+#
+# Every directory a query writes for itself (ANN store copies, staged
+# stream sources, stream sinks and checkpoints) lives under ONE temp
+# root, created on first use and removed by ONE exit hook. Paths are
+# named by a process-wide counter, so concurrent queries never collide.
+
+_SCRATCH_ROOT: str | None = None
+_SCRATCH_SEQ = itertools.count()
+_SCRATCH_LOCK = threading.Lock()
+
+
+def _scratch_path(tag: str) -> str:
+    """A fresh, NOT yet existing path under the scratch root (a
+    root-level parquet write uses errorifexists, so callers create it)."""
+    global _SCRATCH_ROOT
+    with _SCRATCH_LOCK:
+        if _SCRATCH_ROOT is None:
+            _SCRATCH_ROOT = tempfile.mkdtemp(prefix="overpaint_scratch_")
+            atexit.register(shutil.rmtree, _SCRATCH_ROOT, ignore_errors=True)
+        return os.path.join(_SCRATCH_ROOT, f"{tag}_{next(_SCRATCH_SEQ)}")
+
+
 # --- session-shared persisted ANN stores (r10, VERDICT r9 #4) ----------------
 #
 # Seven declared rows exercise the persisted IVF-PQ index; before r10
@@ -2204,17 +2233,10 @@ def _session_ann_store(
     (``scope='full'``) or its first half (``scope='half'``), built once
     per (Spark application, sf_dir). NEVER mutate the returned store —
     mutating consumers go through :func:`_fresh_ann_store_copy`."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from overpaint_spark.operators.ann_index import (
         build_ann_index,
         persist_ann_index,
     )
-    from overpaint_spark.sources.catalog import footer_row_count
 
     key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"), scope)
     path = _ANN_STORE_CACHE.get(key)
@@ -2229,10 +2251,7 @@ def _session_ann_store(
         e, dim=_QUANT_DIM, n_centroids=n_cent,
         n_subspaces=_PQ_M, n_codes=_PQ_K,
     )
-    path = tempfile.mkdtemp(
-        prefix=f"overpaint_annshared_{scope}_{uuid.uuid4().hex[:8]}_"
-    )
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    path = _scratch_path(f"annshared_{scope}")
     persist_ann_index(idx, path)
     _ANN_STORE_CACHE[key] = path
     return path
@@ -2249,23 +2268,8 @@ def _fresh_ann_store_copy(
     relation list (VERDICT r10 #7), so a future store layout (e.g. a
     ``codes_delta`` or tombstone set in the source) can never be
     silently dropped from a mutator's copy."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
-    src = _session_ann_store(spark, sf_dir, scope)
-    dst = tempfile.mkdtemp(
-        prefix=f"overpaint_anncopy_{uuid.uuid4().hex[:8]}_"
-    )
-    atexit.register(shutil.rmtree, dst, ignore_errors=True)
-    for rel in os.listdir(src):
-        s = os.path.join(src, rel)
-        if os.path.isdir(s):
-            shutil.copytree(s, os.path.join(dst, rel))
-        else:
-            shutil.copy2(s, os.path.join(dst, rel))
+    dst = _scratch_path("anncopy")
+    shutil.copytree(_session_ann_store(spark, sf_dir, scope), dst)
     return dst
 
 
@@ -2286,147 +2290,165 @@ def _fresh_ann_store_copy(
 _STREAM_SRC_CACHE: dict[tuple[str, str, str], str] = {}
 
 
-def _skip_no_data_batches(fn):
-    """Disable Spark's trailing no-data micro-batch for a streaming
-    witness whose OUTPUT cannot depend on it (r12, guide §1.2: remove
-    work the result never needs).
-
-    After availableNow drains the staged files, Spark schedules one
-    more EMPTY batch purely to advance the watermark and run state
-    eviction (``spark.sql.streaming.noDataMicroBatches.enabled``,
-    default true). That batch still pays the full per-batch machinery
-    — 2.2-2.6 s measured here: query planning, a 32-partition shuffle
-    of zero rows, 4 state-store commits per partition for a
-    stream-stream join, offset/commit log fsyncs — and for these
-    witnesses emits NOTHING:
-
-    - inner stream-stream joins emit matches as data arrives; the
-      no-data batch only evicts state (stream_attribution);
-    - foreachBatch / stateless sinks receive an empty frame and the
-      idempotent upsert writes nothing (clean/phash/fk gates, cdc,
-      psi, lm, cms, rule alerts, ann ingest);
-    - complete-mode aggregates re-emit the identical final state
-      (corpus_stats, length_histogram);
-    - applyInPandasWithState witnesses configure NO timeout, so the
-      no-data batch cannot fire timeout emission (sessionize, topk).
-
-    q_stream_events_hourly is the one witness that MUST keep it:
-    append-mode windows flush in the batch AFTER the sentinel advances
-    the watermark — that batch IS the no-data batch. It is therefore
-    not decorated. Every decorated witness stays value-checked against
-    its DuckDB oracle at all three SFs (the r12 flip was verified
-    row-identical before landing).
-
-    CONCURRENCY ASSUMPTION (ADVICE r12): the flag is session-global
-    conf, set for the duration of the wrapped call and restored in the
-    ``finally``. That is safe only while witnesses run strictly
-    sequentially on the session — which the bench, the oracle checker,
-    and the CLI all do. A q_stream_events_hourly started CONCURRENTLY
-    with a decorated witness could observe the flag off and silently
-    lose its append-mode flush rows. If a concurrent harness is ever
-    needed, scope the flag via a cloned session
-    (``spark.newSession()``) for the decorated witnesses instead."""
-    import functools
-
-    key = "spark.sql.streaming.noDataMicroBatches.enabled"
-
-    @functools.wraps(fn)
-    def wrapper(spark: SparkSession, sf_dir: str) -> DataFrame:
-        try:
-            old = spark.conf.get(key)
-        except Exception:  # noqa: BLE001 - conf key absent: Spark default
-            old = "true"
-        spark.conf.set(key, "false")
-        try:
-            return fn(spark, sf_dir)
-        finally:
-            spark.conf.set(key, old)
-
-    return wrapper
-
-
-def _scale_state_partitions(table: str):
-    """Scale-adaptive state-store partitioning for STATEFUL streaming
-    witnesses (guide §2: derive partitioning from input size, never
-    from the core count). A stateful operator (windowed/complete-mode
-    aggregate, stream-stream join, applyInPandasWithState) instantiates
-    ONE state store per shuffle partition per operator PER MICRO-BATCH
-    — a symmetric hash join keeps four stores per partition — and the
-    partition count is pinned into the checkpoint from
-    ``spark.sql.shuffle.partitions`` at query start, so AQE's runtime
-    coalescing CANNOT shrink it. With the session default (one
-    partition per core, 32 on the bench box) a bounded fixture stream
-    paid 32×4 store open/commit cycles per batch to hold a few
-    thousand rows of state: stream_attribution measured 10.2 s → 3.7 s
-    and stream_events_hourly 6.6 s → 3.6 s at 4 partitions, identical
-    rows (the oracle re-verified; comparisons sort rows, and the
-    declared outputs are set-semantied relations).
-
-    The count derives from the witness's INPUT size — one state
-    partition per ``$SPARK_GRAFT_STREAM_STATE_ROWS`` (default 100k)
-    footer rows of ``table``, floor 4, cap 10k — so the bench fixture
-    gets 4 while a 100 TB corpus gets thousands; ~100k keys of state
-    per partition is tens of MB, comfortably inside executor memory
-    (DEPLOY.md documents the target and override). Same
-    sequential-witness assumption as _skip_no_data_batches: the conf
-    is session-global, set around the wrapped call and restored in the
-    ``finally``."""
-
-    def deco(fn):
-        import functools
-
-        @functools.wraps(fn)
-        def wrapper(spark: SparkSession, sf_dir: str) -> DataFrame:
-            import os
-
-            from overpaint_spark.sources.catalog import footer_row_count
-
-            key = "spark.sql.shuffle.partitions"
-            old = spark.conf.get(key)
-            n = footer_row_count(f"{sf_dir}/{table}.parquet")
-            target = max(
-                1,
-                int(os.environ.get("SPARK_GRAFT_STREAM_STATE_ROWS", "100000")),
-            )
-            parts = max(4, min(-(-n // target), 10_000))
-            spark.conf.set(key, str(parts))
-            try:
-                return fn(spark, sf_dir)
-            finally:
-                spark.conf.set(key, old)
-
-        return wrapper
-
-    return deco
-
-
 def _session_stream_src(
     spark: SparkSession, sf_dir: str, recipe: str, build
 ) -> str:
     """Path of an immutable staged source directory for ``recipe``,
     built once per (Spark application, sf_dir) by calling
-    ``build(path)`` and cached for the session. NEVER write into the
-    returned directory."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
+    ``build(path)`` on a not-yet-existing scratch path and cached for
+    the session. NEVER write into the returned directory."""
     key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"), recipe)
     path = _STREAM_SRC_CACHE.get(key)
     if path is not None and os.path.isdir(path):
         return path
-    # the source dir itself must NOT pre-exist (a root-level parquet
-    # write uses errorifexists); build into a child of the temp parent
-    parent = tempfile.mkdtemp(
-        prefix=f"overpaint_streamsrc_{recipe}_{uuid.uuid4().hex[:8]}_"
-    )
-    atexit.register(shutil.rmtree, parent, ignore_errors=True)
-    path = os.path.join(parent, "src")
+    path = _scratch_path(f"streamsrc_{recipe}")
     build(path)
     _STREAM_SRC_CACHE[key] = path
     return path
+
+
+def _table_stream_src(spark: SparkSession, sf_dir: str, table: str) -> str:
+    """Stream source directory holding one whole fixture table. The file
+    source reads directories only: a table stored as a directory is its
+    own source, a single-file table is symlinked into a one-entry
+    directory (the link follows the file, so a rewritten fixture is
+    never served stale)."""
+    path = os.path.abspath(f"{sf_dir}/{table}.parquet")
+    if os.path.isdir(path):
+        return path
+
+    def _link(p: str) -> None:
+        os.makedirs(p)
+        os.symlink(path, os.path.join(p, os.path.basename(path)))
+
+    return _session_stream_src(spark, sf_dir, f"{table}_link", _link)
+
+
+# --- the streaming-witness runner ----------------------------------------------
+
+_NO_DATA_BATCHES = "spark.sql.streaming.noDataMicroBatches.enabled"
+_SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+_STATE_ROWS_PER_PARTITION = 100_000
+_STREAM_START_LOCK = threading.Lock()
+
+
+def _run_stream(
+    spark: SparkSession,
+    name: str,
+    start: Callable[[str, str], object],
+    *,
+    state_input: str | None = None,
+    no_data_batches: bool = False,
+    dirs: tuple[str, str] | None = None,
+) -> tuple[str, str]:
+    """Run one streaming witness's availableNow query to completion and
+    return its ``(out_dir, ckpt_dir)``.
+
+    ``start(out_dir, ckpt_dir)`` builds and starts the query. Both dirs
+    are fresh scratch paths (``dirs`` passes an earlier run's pair, so a
+    second run resumes from the same checkpoint). The witness's conf is
+    set ONLY while ``start`` runs, under a module lock, and restored
+    (or unset, if it was unset) in the ``finally``: Spark copies the
+    session conf into a streaming query when it starts, so conf scoped
+    to the start is the query's conf for its whole life, and no other
+    witness — started before, after or concurrently — ever sees it. A
+    batch query PLANNED on another thread inside that short window can
+    see the state-partition count, which moves its shuffle width but
+    never its rows. Then it waits up to 300 s and, on timeout, stops
+    the query and raises rather than hand back a partial sink.
+
+    Trailing no-data micro-batch: OFF unless ``no_data_batches``. After
+    availableNow drains the staged files, Spark schedules one more
+    EMPTY batch purely to advance the watermark and evict state. It
+    pays the full per-batch machinery — 2.2-2.6 s measured: planning, a
+    shuffle of zero rows, state-store commits per partition,
+    offset/commit log fsyncs — and emits NOTHING for these witnesses:
+
+    - inner stream-stream joins emit matches as data arrives; the
+      no-data batch only evicts state (stream_attribution);
+    - foreachBatch / stateless sinks receive an empty frame and the
+      idempotent upsert writes nothing (clean/phash/fk gates, cdc,
+      psi, lm, nb, cms, rule alerts, ann ingest);
+    - complete-mode aggregates re-emit the identical final state
+      (corpus_stats, length_histogram);
+    - applyInPandasWithState witnesses configure NO timeout, so the
+      no-data batch cannot fire timeout emission (sessionize, topk).
+
+    stream_events_hourly is the one witness that MUST keep it:
+    append-mode windows flush in the batch AFTER the sentinel advances
+    the watermark — that batch IS the no-data batch.
+
+    State partitions (``state_input`` = the stateful witness's input
+    table): a stateful operator instantiates ONE state store per
+    shuffle partition per operator PER MICRO-BATCH — a symmetric hash
+    join keeps four — and the count is pinned into the checkpoint from
+    ``spark.sql.shuffle.partitions`` at query start, so AQE cannot
+    shrink it later. With one partition per core (32 on the bench box)
+    a bounded fixture stream paid 32×4 store open/commit cycles per
+    batch to hold a few thousand rows of state (stream_attribution
+    10.2 s → 3.7 s, stream_events_hourly 6.6 s → 3.6 s at 4 partitions,
+    identical rows). The count therefore follows the INPUT, not the
+    core count: one partition per 100k footer rows, clamped to
+    [4, 10 000] — 4 for the bench fixture, thousands for a 100 TB
+    corpus, ~100k keys (tens of MB) of state per partition."""
+    from overpaint_spark.streaming.sink import await_available_now
+
+    out_dir, ckpt_dir = dirs or (
+        _scratch_path(f"{name}_out"), _scratch_path(f"{name}_ckpt")
+    )
+    conf = {_NO_DATA_BATCHES: str(no_data_batches).lower()}
+    if state_input is not None:
+        n = footer_row_count(state_input)
+        parts = -(-n // _STATE_ROWS_PER_PARTITION)
+        conf[_SHUFFLE_PARTITIONS] = str(max(4, min(parts, 10_000)))
+    with _STREAM_START_LOCK:
+        old = {k: spark.conf.get(k, None) for k in conf}
+        try:
+            for k, v in conf.items():
+                spark.conf.set(k, v)
+            sq = start(out_dir, ckpt_dir)
+        finally:
+            for k, v in old.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
+    await_available_now(sq, 300, f"{name}: availableNow trigger")
+    return out_dir, ckpt_dir
+
+
+def _run_memory_stream(
+    spark: SparkSession, name: str, agg: DataFrame, state_input: str
+) -> DataFrame:
+    """Run a complete-mode aggregate into a memory sink through
+    :func:`_run_stream` and return the drained final state. The sink's
+    query name is the (unique) basename of the run's out dir."""
+
+    def start(out_dir: str, ckpt_dir: str):
+        return (
+            agg.writeStream.format("memory")
+            .queryName(os.path.basename(out_dir))
+            .option("checkpointLocation", ckpt_dir)
+            .outputMode("complete")
+            .trigger(availableNow=True)
+            .start()
+        )
+
+    out_dir, _ = _run_stream(spark, name, start, state_input=state_input)
+    return _drain_memory_sink(spark, os.path.basename(out_dir))
+
+
+def _start_file_sink(df: DataFrame, out_dir: str, ckpt_dir: str):
+    """Start ``df`` as an append-mode availableNow parquet file sink
+    (exactly-once through the sink's own ``_spark_metadata`` log)."""
+    return (
+        df.writeStream.format("parquet")
+        .option("path", out_dir)
+        .option("checkpointLocation", ckpt_dir)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def q_retrieval_rrf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5120,11 +5142,6 @@ def q_ann_topk_ivfpq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     ann_topk_ivfpq's SQL verbatim. Each run pays the honest lifecycle
     cost (one temp-dir write + read; dirs self-clean at interpreter
     exit, the stream-sink pattern)."""
-    import atexit
-    import shutil
-    import tempfile
-    import uuid
-
     from overpaint_spark.operators.ann_index import (
         build_ann_index,
         load_ann_index,
@@ -5138,8 +5155,7 @@ def q_ann_topk_ivfpq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
         e, dim=_QUANT_DIM, n_centroids=n_cent,
         n_subspaces=_PQ_M, n_codes=_PQ_K,
     )
-    path = tempfile.mkdtemp(prefix=f"overpaint_annidx_{uuid.uuid4().hex[:8]}_")
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    path = _scratch_path("annidx")
     persist_ann_index(idx, path)
     loaded = load_ann_index(spark, path)
     out = search_ann_index(
@@ -5191,7 +5207,6 @@ def q_ann_topk_ivfpq_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_skip_no_data_batches
 def q_stream_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The persisted index grown by STRUCTURED STREAMING — eighth
     oracle-verified streaming query, and ann_topk_ivfpq_incremental's
@@ -5207,18 +5222,12 @@ def q_stream_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     chain (build-half → persist → stream-encode × 2 batches → append →
     reload → search) at value level. Batch/stream codes-level identity
     is additionally pinned in tests/test_streaming.py."""
-    import atexit
-    import shutil
-    import tempfile
-    import uuid
-
     from overpaint_spark.operators.ann_index import (
         build_ann_index,
         load_ann_index,
         persist_ann_index,
         search_ann_index,
     )
-    from overpaint_spark.sources.catalog import footer_row_count
     from overpaint_spark.streaming.ann_ingest import write_ann_ingest_stream
 
     e = _t(spark, sf_dir, "embeddings")
@@ -5229,13 +5238,6 @@ def q_stream_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.filter(F.col("vec_id") < split), dim=_QUANT_DIM,
         n_centroids=n_cent, n_subspaces=_PQ_M, n_codes=_PQ_K,
     )
-    run = uuid.uuid4().hex[:8]
-    base = tempfile.gettempdir()
-    path = f"{base}/stream_annidx_{run}"
-    ckpt = f"{base}/stream_annckpt_{run}"
-    for dpath in (path, ckpt):
-        atexit.register(shutil.rmtree, dpath, ignore_errors=True)
-    persist_ann_index(idx0, path)
     arriving = e.filter(F.col("vec_id") >= split).select("vec_id", "embedding")
     mid = split + (n - split) // 2
 
@@ -5253,15 +5255,14 @@ def q_stream_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{src}/*")
     )
-    sq = write_ann_ingest_stream(
-        stream, path, ckpt, trigger_available_now=True
-    )
-    if not sq.awaitTermination(300):
-        sq.stop()
-        raise RuntimeError(
-            "stream_ann_ingest: availableNow trigger did not complete "
-            "within 300 s — refusing to search a partially-grown index"
+
+    def start(path: str, ckpt: str):
+        persist_ann_index(idx0, path)
+        return write_ann_ingest_stream(
+            stream, path, ckpt, trigger_available_now=True
         )
+
+    path, _ = _run_stream(spark, "stream_ann_ingest", start)
     grown = load_ann_index(spark, path)
     out = search_ann_index(
         grown, e.filter(F.col("vec_id") < 10), n_probe=n_probe, k=5
@@ -8324,8 +8325,6 @@ def q_corpus_source_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_skip_no_data_batches
-@_scale_state_partitions("documents")
 def q_stream_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The corpus composition report computed by STRUCTURED STREAMING:
     the same per-source aggregation as corpus_source_stats, run as a
@@ -8337,11 +8336,7 @@ def q_stream_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Complete output mode is safe at scale: state is one row per source
     (a tiny dimension). In production the same plan runs continuously
     from a Kafka/files source; only the sink and trigger change."""
-    import uuid
-
-    from overpaint_spark.streaming.stream_profile import stage_stream_dir
-
-    src = stage_stream_dir(f"{sf_dir}/documents.parquet")
+    src = _table_stream_src(spark, sf_dir, "documents")
     schema = _t(spark, sf_dir, "documents").schema
     stream = spark.readStream.schema(schema).parquet(src)
     q = TX.quality_score(F.col("text")).cast("decimal(18,6)")
@@ -8358,27 +8353,14 @@ def q_stream_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("avg_quality"),
         )
     )
-    sink = f"stream_corpus_stats_{uuid.uuid4().hex[:8]}"
-    sq = (
-        agg.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
+    return _run_memory_stream(
+        spark, "stream_corpus_stats", agg, f"{sf_dir}/documents.parquet"
     )
-    finished = sq.awaitTermination(300)
-    if not finished:
-        sq.stop()
-        raise RuntimeError(
-            "stream_corpus_stats: availableNow trigger did not complete "
-            "within 300 s — refusing to return a partial memory-sink table"
-        )
-    return _drain_memory_sink(spark, sink)
 
 
 def _drain_memory_sink(spark: SparkSession, sink: str) -> DataFrame:
     """Materialize a completed memory-sink table as a local relation and
-    DROP the sink view: the uuid-named tables would otherwise accumulate
+    DROP the sink view: the per-run tables would otherwise accumulate
     in the session catalog (and driver memory) for the lifetime of a
     long-lived session that keeps invoking the streaming queries. The
     results are tiny by construction (complete-mode aggregates over
@@ -9909,8 +9891,6 @@ def _oracle_corpus_length_histogram() -> str:
     )
 
 
-@_skip_no_data_batches
-@_scale_state_partitions("documents")
 def q_stream_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The length histogram computed by STRUCTURED STREAMING — second
     oracle-verified streaming query next to stream_corpus_stats, with a
@@ -9918,11 +9898,7 @@ def q_stream_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(buckets) rows) rather than a source dimension, and min/max
     streaming aggregates next to the count. Same availableNow → memory
     sink harness; the oracle is the batch twin's SQL verbatim."""
-    import uuid
-
-    from overpaint_spark.streaming.stream_profile import stage_stream_dir
-
-    src = stage_stream_dir(f"{sf_dir}/documents.parquet")
+    src = _table_stream_src(spark, sf_dir, "documents")
     schema = _t(spark, sf_dir, "documents").schema
     stream = spark.readStream.schema(schema).parquet(src)
     lo = (F.floor(F.col("n_chars") / _LEN_BUCKET) * _LEN_BUCKET).cast("bigint")
@@ -9931,24 +9907,11 @@ def q_stream_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("n_chars").alias("min_chars"),
         F.max("n_chars").alias("max_chars"),
     )
-    sink = f"stream_len_hist_{uuid.uuid4().hex[:8]}"
-    sq = (
-        agg.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
+    return _run_memory_stream(
+        spark, "stream_length_histogram", agg, f"{sf_dir}/documents.parquet"
     )
-    if not sq.awaitTermination(300):
-        sq.stop()
-        raise RuntimeError(
-            "stream_length_histogram: availableNow trigger did not complete "
-            "within 300 s — refusing to return a partial memory-sink table"
-        )
-    return _drain_memory_sink(spark, sink)
 
 
-@_skip_no_data_batches
 def q_stream_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LM quality scoring by STRUCTURED STREAMING — third oracle-
     verified streaming query, with a third state shape: ZERO state (a
@@ -9973,40 +9936,21 @@ def q_stream_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     model exceeds the 512-entry cap, so the driver now verifies the
     100 TB path: per micro-batch, the batch broadcast-join scorer
     inside foreachBatch with the exactly-once sink."""
-    import atexit
-    import shutil
-    import tempfile
-    import uuid
-
     from overpaint_spark.operators import lm as LM
     from overpaint_spark.streaming.lm import write_lm_score_stream
     from overpaint_spark.streaming.sink import read_sink
-    from overpaint_spark.streaming.stream_profile import stage_stream_dir
 
     d = _t(spark, sf_dir, "documents")
     model = LM.build_lm_model(d, sample_mod=_LM_SAMPLE_MOD)
 
-    src = stage_stream_dir(f"{sf_dir}/documents.parquet")
+    src = _table_stream_src(spark, sf_dir, "documents")
     stream = spark.readStream.schema(d.schema).parquet(src)
-
-    run = uuid.uuid4().hex[:8]
-    base = tempfile.gettempdir()
-    out_dir = f"{base}/stream_lm_{run}"
-    ckpt_dir = f"{base}/stream_lm_ckpt_{run}"
-    # sink + checkpoint dirs are per-invocation (uuid): reclaim them at
-    # interpreter exit like stage_stream_dir's staging dirs, so bench
-    # loops and repeated sessions never accumulate temp output
-    atexit.register(shutil.rmtree, out_dir, ignore_errors=True)
-    atexit.register(shutil.rmtree, ckpt_dir, ignore_errors=True)
-    sq = write_lm_score_stream(
-        stream, model, out_dir, ckpt_dir, trigger_available_now=True
+    out_dir, _ = _run_stream(
+        spark, "stream_lm_score",
+        lambda out, ckpt: write_lm_score_stream(
+            stream, model, out, ckpt, trigger_available_now=True
+        ),
     )
-    if not sq.awaitTermination(300):
-        sq.stop()
-        raise RuntimeError(
-            "stream_lm_score: availableNow trigger did not complete "
-            "within 300 s — refusing to return a partial sink"
-        )
     # read_sink's BATCH_COL drop is a no-op if the dispatch chose the
     # plain file sink (tiny-model map path), so both layouts read here
     return read_sink(spark, out_dir).select(
@@ -10014,8 +9958,6 @@ def q_stream_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_skip_no_data_batches
-@_scale_state_partitions("events")
 def q_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap sessionization by the CUSTOM STATEFUL streaming operator
     (streaming/sessionize.py — applyInPandasWithState, per-user O(1)
@@ -10031,43 +9973,24 @@ def q_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch window; equal-timestamp ties cannot flip session membership
     (gap 0 never exceeds the threshold). The cross-batch late-arrival
     policies stay pinned in tests/test_streaming.py."""
-    import atexit
-    import shutil
-    import tempfile
-    import uuid
-
     from overpaint_spark.streaming.sessionize import streaming_sessionize
 
     e = _t(spark, sf_dir, "events").select(
         "user_id", F.col("ts").cast("timestamp").alias("ts")
     )
-    run = uuid.uuid4().hex[:8]
-    base = tempfile.gettempdir()
     src = _session_stream_src(
         spark, sf_dir, "sess",
         lambda p: e.coalesce(1).write.parquet(p),
     )
-    out_dir = f"{base}/stream_sess_out_{run}"
-    ckpt_dir = f"{base}/stream_sess_ckpt_{run}"
-    for d in (out_dir, ckpt_dir):
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
     stream = spark.readStream.schema("user_id long, ts timestamp").parquet(src)
-    sq = (
-        # idle_timeout=False: on a finite availableNow run the
-        # processing-time flush would schedule no-data batches forever
-        streaming_sessionize(stream, idle_timeout=False)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
+    # idle_timeout=False: on a finite availableNow run the
+    # processing-time flush would schedule no-data batches forever
+    sessions = streaming_sessionize(stream, idle_timeout=False)
+    out_dir, _ = _run_stream(
+        spark, "stream_sessionize",
+        lambda out, ckpt: _start_file_sink(sessions, out, ckpt),
+        state_input=f"{sf_dir}/events.parquet",
     )
-    if not sq.awaitTermination(300):
-        sq.stop()
-        raise RuntimeError(
-            "stream_sessionize: availableNow trigger did not complete "
-            "within 300 s — refusing to return a partial sink"
-        )
     return spark.read.parquet(out_dir)
 
 
@@ -10094,7 +10017,6 @@ def _oracle_stream_sessionize() -> str:
 _PSI_LO, _PSI_HI, _PSI_BINS = 0.0, 200.0, 10
 
 
-@_skip_no_data_batches
 def q_stream_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distribution-drift monitoring by STRUCTURED STREAMING — sixth
     oracle-verified streaming query: each arriving micro-batch of
@@ -10111,13 +10033,9 @@ def q_stream_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle mirrors the fold bucket-for-bucket. Fixture margins of
     each term to its half-up boundary were measured ≥ 2e-3 term units
     at all three SFs — 13 orders above 1-ulp LN noise."""
-    import atexit
-    import shutil
-    import tempfile
-    import uuid
-
     from overpaint_spark.rules.psi import histogram
     from overpaint_spark.streaming.drift import write_psi_stream
+    from overpaint_spark.streaming.sink import read_sink
 
     e = _t(spark, sf_dir, "events")
     base_hist = histogram(
@@ -10126,36 +10044,25 @@ def q_stream_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     incoming = e.filter(F.col("user_id") % 3 == 0).select(
         "value", (F.col("user_id") % 2).alias("split")
     )
-    run = uuid.uuid4().hex[:8]
-    base = tempfile.gettempdir()
 
     def _stage(p: str) -> None:
         incoming.filter(F.col("split") == 0).coalesce(1).write.parquet(f"{p}/a")
         incoming.filter(F.col("split") == 1).coalesce(1).write.parquet(f"{p}/b")
 
     src = _session_stream_src(spark, sf_dir, "psi", _stage)
-    out_dir = f"{base}/stream_psi_out_{run}"
-    ckpt_dir = f"{base}/stream_psi_ckpt_{run}"
-    for d in (out_dir, ckpt_dir):
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
     stream = (
         spark.readStream.schema("value double, split long")
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{src}/*")
     )
-    sq = write_psi_stream(
-        stream, base_hist, out_dir, ckpt_dir,
-        column="value", lo=_PSI_LO, hi=_PSI_HI, n_bins=_PSI_BINS,
-        label_col="split", trigger_available_now=True,
+    out_dir, _ = _run_stream(
+        spark, "stream_psi",
+        lambda out, ckpt: write_psi_stream(
+            stream, base_hist, out, ckpt,
+            column="value", lo=_PSI_LO, hi=_PSI_HI, n_bins=_PSI_BINS,
+            label_col="split", trigger_available_now=True,
+        ),
     )
-    if not sq.awaitTermination(300):
-        sq.stop()
-        raise RuntimeError(
-            "stream_psi: availableNow trigger did not complete within "
-            "300 s — refusing to return a partial sink"
-        )
-    from overpaint_spark.streaming.sink import read_sink
-
     return read_sink(spark, out_dir)
 
 
@@ -10230,7 +10137,6 @@ def _alert_rules():
     ]
 
 
-@_skip_no_data_batches
 def q_stream_rule_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The VALIDATION/ALERTING sink declared — fourteenth
     oracle-verified streaming witness, covering the one foreachBatch
@@ -10250,18 +10156,11 @@ def q_stream_rule_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical five rules per split in SQL with zero float hazard. The
     fixture genuinely alerts: the value-range and type-length rules
     fail on both splits (pinned below by the oracle itself)."""
-    import atexit
-    import shutil
-    import tempfile
-    import uuid
-
     from overpaint_spark.streaming.alerts import write_rule_alerts_stream
     from overpaint_spark.streaming.sink import read_sink
 
     e = _t(spark, sf_dir, "events")
     cols = ["event_id", "ts", "user_id", "event_type", "value", "props"]
-    run = uuid.uuid4().hex[:8]
-    base = tempfile.gettempdir()
 
     def _stage(p: str) -> None:
         e.filter(F.col("user_id") % 2 == 0).select(cols).coalesce(
@@ -10272,30 +10171,23 @@ def q_stream_rule_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).write.parquet(f"{p}/b")
 
     src = _session_stream_src(spark, sf_dir, "events_usermod2", _stage)
-    alert_dir = f"{base}/stream_alerts_out_{run}"
-    ckpt_dir = f"{base}/stream_alerts_ckpt_{run}"
-    for dpath in (alert_dir, ckpt_dir):
-        atexit.register(shutil.rmtree, dpath, ignore_errors=True)
     stream = (
         spark.readStream.schema(e.select(cols).schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{src}/*")
     )
-    sq = write_rule_alerts_stream(
-        stream,
-        _alert_rules(),
-        alert_dir,
-        ckpt_dir,
-        table_name="stream",
-        trigger_available_now=True,
-        include_passes=True,
+    alert_dir, _ = _run_stream(
+        spark, "stream_rule_alerts",
+        lambda out, ckpt: write_rule_alerts_stream(
+            stream,
+            _alert_rules(),
+            out,
+            ckpt,
+            table_name="stream",
+            trigger_available_now=True,
+            include_passes=True,
+        ),
     )
-    if not sq.awaitTermination(300):
-        sq.stop()
-        raise RuntimeError(
-            "stream_rule_alerts: availableNow trigger did not complete "
-            "within 300 s — refusing to return a partial alert log"
-        )
     return read_sink(spark, alert_dir).select(
         "table_name", "rule_name", "column_name", "metric_value", "passed"
     )
@@ -10337,7 +10229,6 @@ def _oracle_stream_rule_alerts() -> str:
 # --- streaming image-ingest gate (r10) -----------------------------------------
 
 
-@_skip_no_data_batches
 def q_stream_phash_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The image-ingest gate's SINK declared — sixteenth
     oracle-verified streaming witness (multimodal_phash_gate's shared
@@ -10356,11 +10247,6 @@ def q_stream_phash_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-split phash collisions so the gate honestly admits
     everything; the sf0.1 exact dups give it real rejects (the
     multimodal_phash_gate row contract, streamed)."""
-    import atexit
-    import shutil
-    import tempfile
-    import uuid
-
     from overpaint_spark.streaming.phash import write_phash_dedup_stream
     from overpaint_spark.streaming.sink import read_sink
 
@@ -10368,8 +10254,6 @@ def q_stream_phash_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
     incoming = docs.filter(F.col("doc_id") % 5 == 0)
     existing_hashes = MM.image_phash(docs.filter(F.col("doc_id") % 5 != 0))
     cols = ["doc_id", "text", "lang", "source", "n_chars"]
-    run = uuid.uuid4().hex[:8]
-    base = tempfile.gettempdir()
 
     def _stage(p: str) -> None:
         half = (F.col("doc_id") / 5).cast("long") % 2
@@ -10381,25 +10265,18 @@ def q_stream_phash_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     src = _session_stream_src(spark, sf_dir, "docs_mod5_halves", _stage)
-    out_dir = f"{base}/stream_phash_out_{run}"
-    ckpt_dir = f"{base}/stream_phash_ckpt_{run}"
-    for dpath in (out_dir, ckpt_dir):
-        atexit.register(shutil.rmtree, dpath, ignore_errors=True)
     stream = (
         spark.readStream.schema(incoming.select(cols).schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{src}/*")
     )
-    sq = write_phash_dedup_stream(
-        stream, existing_hashes, out_dir, ckpt_dir,
-        max_hamming=_PHASH_MAX_HAMMING, trigger_available_now=True,
+    out_dir, _ = _run_stream(
+        spark, "stream_phash_admit",
+        lambda out, ckpt: write_phash_dedup_stream(
+            stream, existing_hashes, out, ckpt,
+            max_hamming=_PHASH_MAX_HAMMING, trigger_available_now=True,
+        ),
     )
-    if not sq.awaitTermination(300):
-        sq.stop()
-        raise RuntimeError(
-            "stream_phash_admit: availableNow trigger did not complete "
-            "within 300 s — refusing to return a partial sink"
-        )
     return read_sink(
         spark,
         out_dir,
@@ -10434,7 +10311,6 @@ _CLEAN_LM_SAMPLE_MOD = 3
 _CLEAN_BAND_LO, _CLEAN_BAND_HI = 5700, 6100
 
 
-@_skip_no_data_batches
 def q_stream_clean_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The COMPOSED ingest-cleaning sink declared — fifteenth
     oracle-verified streaming witness, and the streaming twin of the
@@ -10458,11 +10334,6 @@ def q_stream_clean_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
     side only) ∧ the exact/near CTEs of the incremental dedup oracle.
     Per-row determinism vs the static corpus makes the admitted set
     batch-order independent (the stream_fk_quarantine proof shape)."""
-    import atexit
-    import shutil
-    import tempfile
-    import uuid
-
     from overpaint_spark.operators import lm as LM
     from overpaint_spark.streaming.clean import write_clean_stream
     from overpaint_spark.streaming.sink import read_sink
@@ -10472,8 +10343,6 @@ def q_stream_clean_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
     incoming = d.filter(F.col("doc_id") % _INCR_MOD == 0)
     model = LM.build_lm_model(existing, sample_mod=_CLEAN_LM_SAMPLE_MOD)
     cols = ["doc_id", "text", "lang", "source", "n_chars"]
-    run = uuid.uuid4().hex[:8]
-    base = tempfile.gettempdir()
 
     def _stage(p: str) -> None:
         half = (F.col("doc_id") / _INCR_MOD).cast("long") % 2
@@ -10491,26 +10360,19 @@ def q_stream_clean_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _session_stream_src(
         spark, sf_dir, f"docs_mod{_INCR_MOD}_halves", _stage
     )
-    out_dir = f"{base}/stream_clean_out_{run}"
-    ckpt_dir = f"{base}/stream_clean_ckpt_{run}"
-    for dpath in (out_dir, ckpt_dir):
-        atexit.register(shutil.rmtree, dpath, ignore_errors=True)
     stream = (
         spark.readStream.schema(incoming.select(cols).schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{src}/*")
     )
-    sq = write_clean_stream(
-        stream, existing, model, out_dir, ckpt_dir,
-        quality_min=0.5, lm_lo=_CLEAN_BAND_LO, lm_hi=_CLEAN_BAND_HI,
-        trigger_available_now=True,
+    out_dir, _ = _run_stream(
+        spark, "stream_clean_admit",
+        lambda out, ckpt: write_clean_stream(
+            stream, existing, model, out, ckpt,
+            quality_min=0.5, lm_lo=_CLEAN_BAND_LO, lm_hi=_CLEAN_BAND_HI,
+            trigger_available_now=True,
+        ),
     )
-    if not sq.awaitTermination(300):
-        sq.stop()
-        raise RuntimeError(
-            "stream_clean_admit: availableNow trigger did not complete "
-            "within 300 s — refusing to return a partial sink"
-        )
     # explicit schema: a replica corpus can legitimately admit ZERO
     # docs (every arrival a duplicate) and an empty sink has no footer
     # to infer from — zero rows is the gate's honest answer, not an
@@ -10563,8 +10425,19 @@ def _oracle_stream_clean_admit() -> str:
     )
 
 
-@_skip_no_data_batches
-@_scale_state_partitions("documents")
+def _docs_mod2_src(spark: SparkSession, sf_dir: str) -> str:
+    """documents' (doc_id, text) staged as two files split by
+    ``doc_id % 2`` — the one shared source of stream_top_tokens and
+    stream_token_cms."""
+    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
+
+    def _stage(p: str) -> None:
+        d.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.parquet(f"{p}/a")
+        d.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.parquet(f"{p}/b")
+
+    return _session_stream_src(spark, sf_dir, "docs_mod2_idtext", _stage)
+
+
 def q_stream_top_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Running corpus-frequency leaderboard by STRUCTURED STREAMING —
     seventh oracle-verified streaming query, and the bounded-state
@@ -10581,52 +10454,27 @@ def q_stream_top_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     verbatim (the text_top_tokens_approx proof shape, streamed). The
     deliberate small-capacity divergence case stays pinned in
     tests/test_streaming.py."""
-    import atexit
-    import shutil
-    import tempfile
-    import uuid
-
     from overpaint_spark.streaming.topk import (
         streaming_top_tokens,
         top_k_snapshot,
     )
 
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    run = uuid.uuid4().hex[:8]
-    base = tempfile.gettempdir()
-
-    def _stage(p: str) -> None:
-        d.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.parquet(f"{p}/a")
-        d.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.parquet(f"{p}/b")
-
-    src = _session_stream_src(spark, sf_dir, "docs_mod2_idtext", _stage)
-    out_dir = f"{base}/stream_topk_out_{run}"
-    ckpt_dir = f"{base}/stream_topk_ckpt_{run}"
-    for dpath in (out_dir, ckpt_dir):
-        atexit.register(shutil.rmtree, dpath, ignore_errors=True)
+    src = _docs_mod2_src(spark, sf_dir)
     stream = (
         spark.readStream.schema("doc_id long, text string")
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{src}/*")
     )
-    sq = (
-        streaming_top_tokens(stream)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
+    out_dir, _ = _run_stream(
+        spark, "stream_top_tokens",
+        lambda out, ckpt: _start_file_sink(
+            streaming_top_tokens(stream), out, ckpt
+        ),
+        state_input=f"{sf_dir}/documents.parquet",
     )
-    if not sq.awaitTermination(300):
-        sq.stop()
-        raise RuntimeError(
-            "stream_top_tokens: availableNow trigger did not complete "
-            "within 300 s — refusing to return a partial sink"
-        )
     return top_k_snapshot(spark.read.parquet(out_dir), k=25)
 
 
-@_skip_no_data_batches
 def q_stream_nb_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NB classification by STRUCTURED STREAMING — fourth oracle-
     verified streaming query: a stateless per-row ARGMAX against the
@@ -10639,45 +10487,23 @@ def q_stream_nb_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     prediction. Scores are all-BIGINT folds over plan-literal
     log-likelihood tables, so the oracle (the batch NB's scoring CTEs
     over all documents) is bit-exact."""
-    import atexit
-    import shutil
-    import tempfile
-    import uuid
-
     from overpaint_spark.operators.nbayes import nb_train
     from overpaint_spark.streaming.nbayes import (
         frozen_nb_model,
         nb_classify_stream,
     )
-    from overpaint_spark.streaming.stream_profile import stage_stream_dir
 
     d = _t(spark, sf_dir, "documents")
     lp, pri = nb_train(d.filter(F.col("doc_id") % 5 != 0))
     labels, prior_ppms, lp_tables = frozen_nb_model(lp, pri)
 
-    src = stage_stream_dir(f"{sf_dir}/documents.parquet")
+    src = _table_stream_src(spark, sf_dir, "documents")
     stream = spark.readStream.schema(d.schema).parquet(src)
     preds = nb_classify_stream(stream, labels, prior_ppms, lp_tables)
-
-    run = uuid.uuid4().hex[:8]
-    base = tempfile.gettempdir()
-    out_dir = f"{base}/stream_nb_{run}"
-    ckpt_dir = f"{base}/stream_nb_ckpt_{run}"
-    atexit.register(shutil.rmtree, out_dir, ignore_errors=True)
-    atexit.register(shutil.rmtree, ckpt_dir, ignore_errors=True)
-    sq = (
-        preds.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
+    out_dir, _ = _run_stream(
+        spark, "stream_nb_classify",
+        lambda out, ckpt: _start_file_sink(preds, out, ckpt),
     )
-    if not sq.awaitTermination(300):
-        sq.stop()
-        raise RuntimeError(
-            "stream_nb_classify: availableNow trigger did not complete "
-            "within 300 s — refusing to return a partial sink"
-        )
     return spark.read.parquet(out_dir)
 
 
@@ -10895,7 +10721,6 @@ def _oracle_text_token_cms() -> str:
     )
 
 
-@_skip_no_data_batches
 def q_stream_token_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-Min sketch by STRUCTURED STREAMING — ninth oracle-verified
     streaming query (streaming/cms.py): each micro-batch appends its
@@ -10909,46 +10734,25 @@ def q_stream_token_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc_id % 2) → two micro-batches, so the snapshot genuinely merges
     cross-batch partials. Sink state is ≤ batches·d·w tiny rows —
     independent of stream length AND vocabulary."""
-    import atexit
-    import shutil
-    import tempfile
-    import uuid
-
     from overpaint_spark.streaming.cms import cms_snapshot, write_cms_stream
 
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    run = uuid.uuid4().hex[:8]
-    base = tempfile.gettempdir()
-
-    def _stage(p: str) -> None:
-        d.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.parquet(f"{p}/a")
-        d.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.parquet(f"{p}/b")
-
-    # identical staging to stream_top_tokens' — one shared copy
-    src = _session_stream_src(spark, sf_dir, "docs_mod2_idtext", _stage)
-    out_dir = f"{base}/stream_cms_out_{run}"
-    ckpt_dir = f"{base}/stream_cms_ckpt_{run}"
-    for dpath in (out_dir, ckpt_dir):
-        atexit.register(shutil.rmtree, dpath, ignore_errors=True)
+    src = _docs_mod2_src(spark, sf_dir)
     stream = (
         spark.readStream.schema("doc_id long, text string")
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{src}/*")
     )
-    sq = write_cms_stream(
-        stream,
-        out_dir,
-        ckpt_dir,
-        depth=_CMS_DEPTH,
-        width=_CMS_WIDTH,
-        trigger_available_now=True,
+    out_dir, _ = _run_stream(
+        spark, "stream_token_cms",
+        lambda out, ckpt: write_cms_stream(
+            stream,
+            out,
+            ckpt,
+            depth=_CMS_DEPTH,
+            width=_CMS_WIDTH,
+            trigger_available_now=True,
+        ),
     )
-    if not sq.awaitTermination(300):
-        sq.stop()
-        raise RuntimeError(
-            "stream_token_cms: availableNow trigger did not complete "
-            "within 300 s — refusing to return a partial sink"
-        )
     cells = cms_snapshot(spark, out_dir)
     return _cms_estimate_card(cells, _exact_top_tokens(spark, sf_dir))
 
@@ -11295,7 +11099,6 @@ def _oracle_profile_fk_discovery() -> str:
 # --- CDC apply by streaming (r9) ------------------------------------------------
 
 
-@_skip_no_data_batches
 def q_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CDC apply as STRUCTURED STREAMING — thirteenth oracle-verified
     streaming query, witnessing the mutable-table sink
@@ -11311,25 +11114,11 @@ def q_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: base ∪ changes → one ROW_NUMBER latest-wins merge in plain
     SQL. Updates never move partitions here (the standing caveat of
     partition-scoped merges — see the operator docstring)."""
-    import atexit
-    import shutil
-    import tempfile
-    import uuid
-
     from overpaint_spark.streaming.upsert import write_upsert_stream
 
     c = _t(spark, sf_dir, "customer")
     cols = ["c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"]
     base = c.select(*cols).withColumn("ver", F.lit(0))
-    run = uuid.uuid4().hex[:8]
-    basedir = tempfile.gettempdir()
-    table = f"{basedir}/stream_cdc_tbl_{run}"
-    ckpt_dir = f"{basedir}/stream_cdc_ckpt_{run}"
-    for dpath in (table, ckpt_dir):
-        atexit.register(shutil.rmtree, dpath, ignore_errors=True)
-    # the TABLE is mutated per run (upsert target) and stays private;
-    # the change feed is immutable and session-shared
-    base.write.partitionBy("c_mktsegment").parquet(table)
 
     def _stage(p: str) -> None:
         for v in (1, 2):
@@ -11353,21 +11142,22 @@ def q_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{src}/*")
     )
-    sq = write_upsert_stream(
-        changes,
-        table,
-        key_cols=["c_custkey"],
-        partition_col="c_mktsegment",
-        order_col="ver",
-        checkpoint_dir=ckpt_dir,
-        trigger_available_now=True,
-    )
-    if not sq.awaitTermination(300):
-        sq.stop()
-        raise RuntimeError(
-            "stream_cdc_apply: availableNow trigger did not complete "
-            "within 300 s — refusing to return a partial sink"
+
+    def start(table: str, ckpt_dir: str):
+        # the TABLE is mutated per run (upsert target) and stays
+        # private; the change feed is immutable and session-shared
+        base.write.partitionBy("c_mktsegment").parquet(table)
+        return write_upsert_stream(
+            changes,
+            table,
+            key_cols=["c_custkey"],
+            partition_col="c_mktsegment",
+            order_col="ver",
+            checkpoint_dir=ckpt_dir,
+            trigger_available_now=True,
         )
+
+    table, _ = _run_stream(spark, "stream_cdc_apply", start)
     return spark.read.parquet(table).select(*cols, "ver")
 
 
@@ -11390,8 +11180,6 @@ def _oracle_stream_cdc_apply() -> str:
 # --- stream-stream interval attribution by streaming (r9) ----------------------
 
 
-@_skip_no_data_batches
-@_scale_state_partitions("events")
 def q_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Click→purchase attribution as a STREAM-STREAM interval join —
     twelfth oracle-verified streaming query, and the first to witness
@@ -11410,11 +11198,6 @@ def q_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     once as it forms — no sentinel needed. Oracle: the interval join
     in plain SQL (raw-timestamp bounds — the events_asof_attribution
     precedent: the fixtures are µs-exact in both engines)."""
-    import atexit
-    import shutil
-    import tempfile
-    import uuid
-
     from overpaint_spark.streaming.attribution import (
         streaming_interval_attribution,
     )
@@ -11432,8 +11215,6 @@ def q_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_id").alias("click_id"),
         F.col("ts").alias("click_ts"),
     )
-    run = uuid.uuid4().hex[:8]
-    base = tempfile.gettempdir()
 
     def _stage(p: str) -> None:
         purchases.coalesce(1).write.parquet(f"{p}/p/a")
@@ -11445,10 +11226,6 @@ def q_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     src = _session_stream_src(spark, sf_dir, "attr_pc", _stage)
-    out_dir = f"{base}/stream_attr_out_{run}"
-    ckpt_dir = f"{base}/stream_attr_ckpt_{run}"
-    for dpath in (out_dir, ckpt_dir):
-        atexit.register(shutil.rmtree, dpath, ignore_errors=True)
     p_stream = (
         spark.readStream.schema(purchases.schema)
         .option("maxFilesPerTrigger", 1)
@@ -11462,20 +11239,11 @@ def q_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = streaming_interval_attribution(
         p_stream, c_stream, max_lag="1 hour", watermark="45 days"
     )
-    sq = (
-        joined.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    out_dir, _ = _run_stream(
+        spark, "stream_attribution",
+        lambda out, ckpt: _start_file_sink(joined, out, ckpt),
+        state_input=f"{sf_dir}/events.parquet",
     )
-    if not sq.awaitTermination(300):
-        sq.stop()
-        raise RuntimeError(
-            "stream_attribution: availableNow trigger did not complete "
-            "within 300 s — refusing to return a partial sink"
-        )
     return spark.read.parquet(out_dir).select(
         "purchase_id",
         "user_id",
@@ -11503,7 +11271,6 @@ def _oracle_stream_attribution() -> str:
 # --- append-mode windowed rollup by streaming (r9) -----------------------------
 
 
-@_scale_state_partitions("events")
 def q_stream_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The hourly rollup by STRUCTURED STREAMING in APPEND mode —
     eleventh oracle-verified streaming query, and the first to witness
@@ -11533,21 +11300,10 @@ def q_stream_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     retained below as a tripwire. The deliberate small-horizon
     late-DROP divergence case is pinned in tests/test_streaming.py.
     Oracle: the batch hourly-rollup SQL verbatim."""
-    import atexit
-    import shutil
-    import tempfile
-    import uuid
-
     from overpaint_spark.streaming.stream_profile import windowed_type_rollup
 
     e = _t(spark, sf_dir, "events")
-    run = uuid.uuid4().hex[:8]
-    base = tempfile.gettempdir()
-    src = f"{base}/stream_evh_src_{run}"
-    out_dir = f"{base}/stream_evh_out_{run}"
-    ckpt_dir = f"{base}/stream_evh_ckpt_{run}"
-    for dpath in (src, out_dir, ckpt_dir):
-        atexit.register(shutil.rmtree, dpath, ignore_errors=True)
+    src = _scratch_path("stream_events_hourly_src")
     cols = ["event_id", "ts", "user_id", "event_type", "value", "props"]
 
     # staging (r12): the two real halves AND the flush sentinel are
@@ -11584,8 +11340,6 @@ def q_stream_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged = _session_stream_src(spark, sf_dir, "evh_halves_sentinel", _stage)
 
     def _link_in(rel: str) -> None:
-        import os
-
         dst = f"{src}/{rel}"
         os.makedirs(dst, exist_ok=True)
         for fn in os.listdir(f"{staged}/{rel}"):
@@ -11597,38 +11351,34 @@ def q_stream_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     _link_in("a")
     _link_in("b")
 
-    def run_available_now() -> None:
-        stream = (
-            spark.readStream.schema(e.select(cols).schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{src}/*")
+    stream = (
+        spark.readStream.schema(e.select(cols).schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(f"{src}/*")
+    )
+    rollup = windowed_type_rollup(stream, watermark="45 days")
+
+    def run_available_now(dirs: tuple[str, str] | None) -> tuple[str, str]:
+        # the flush happens IN the no-data batch, so this is the one
+        # witness that keeps it
+        return _run_stream(
+            spark, "stream_events_hourly",
+            lambda out, ckpt: _start_file_sink(rollup, out, ckpt),
+            state_input=f"{sf_dir}/events.parquet",
+            no_data_batches=True,
+            dirs=dirs,
         )
-        sq = (
-            windowed_type_rollup(stream, watermark="45 days")
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt_dir)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not sq.awaitTermination(300):
-            sq.stop()
-            raise RuntimeError(
-                "stream_events_hourly: availableNow trigger did not "
-                "complete within 300 s — refusing to return a partial sink"
-            )
 
     # run 1: real data only — the sentinel file does not exist in the
     # per-run source dir yet, so no micro-batch delivery order can
     # advance the watermark early
-    run_available_now()
+    dirs = run_available_now(None)
     # link the flush sentinel (46 days past the last real event) in,
     # then resume from the SAME checkpoint: run 2's file-source log
     # already holds every run-1 file, so its only new input is the
     # sentinel
     _link_in("c")
-    run_available_now()
+    out_dir, _ = run_available_now(dirs)
     emitted = spark.read.parquet(out_dir).filter(
         F.col("event_type") != "__flush__"
     )
@@ -11941,7 +11691,6 @@ def _oracle_orders_fk_quarantine() -> str:
     )
 
 
-@_skip_no_data_batches
 def q_stream_fk_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The FK gate by STRUCTURED STREAMING — tenth oracle-verified
     streaming query (streaming/integrity.py): facts arrive as TWO files
@@ -11950,11 +11699,6 @@ def q_stream_fk_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-row stateless, so the sink equals the batch gate over the union
     bit for bit (pinned in tests/test_streaming.py) and this relation's
     oracle is the batch quarantine SQL verbatim."""
-    import atexit
-    import shutil
-    import tempfile
-    import uuid
-
     from overpaint_spark.streaming.integrity import write_fk_gate_stream
 
     o = _t(spark, sf_dir, "orders")
@@ -11963,8 +11707,6 @@ def q_stream_fk_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(_fk_snapshot_pred())
         .select("c_custkey")
     )
-    run = uuid.uuid4().hex[:8]
-    base = tempfile.gettempdir()
 
     def _stage(p: str) -> None:
         o.filter(F.col("o_orderkey") % 2 == 0).coalesce(1).write.parquet(
@@ -11975,24 +11717,17 @@ def q_stream_fk_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     src = _session_stream_src(spark, sf_dir, "orders_mod2", _stage)
-    out_dir = f"{base}/stream_fkq_out_{run}"
-    ckpt_dir = f"{base}/stream_fkq_ckpt_{run}"
-    for dpath in (out_dir, ckpt_dir):
-        atexit.register(shutil.rmtree, dpath, ignore_errors=True)
     stream = (
         spark.readStream.schema(o.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{src}/*")
     )
-    sq = write_fk_gate_stream(
-        stream, pk, out_dir, ckpt_dir, "o_custkey", trigger_available_now=True
+    out_dir, _ = _run_stream(
+        spark, "stream_fk_quarantine",
+        lambda out, ckpt: write_fk_gate_stream(
+            stream, pk, out, ckpt, "o_custkey", trigger_available_now=True
+        ),
     )
-    if not sq.awaitTermination(300):
-        sq.stop()
-        raise RuntimeError(
-            "stream_fk_quarantine: availableNow trigger did not complete "
-            "within 300 s — refusing to return a partial sink"
-        )
     return (
         spark.read.parquet(out_dir)
         .groupBy("o_orderpriority")

@@ -73,3 +73,13 @@ def read_sink(
     if schema is not None:
         reader = reader.schema(f"{schema}, {BATCH_COL} long")
     return reader.parquet(out_dir).drop(BATCH_COL)
+
+
+def await_available_now(
+    sq, timeout_s: int, what: str = "availableNow trigger"
+) -> None:
+    """Wait for an availableNow query to drain its source. On timeout
+    stop it and raise, so no caller ever reads a partial sink."""
+    if not sq.awaitTermination(timeout_s):
+        sq.stop()
+        raise RuntimeError(f"{what} did not complete within {timeout_s} s")

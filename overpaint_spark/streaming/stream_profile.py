@@ -10,8 +10,6 @@ modes — the design goal of the rules engine.
 
 from __future__ import annotations
 
-import atexit
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -33,58 +31,6 @@ def read_events_stream(spark: SparkSession, source_dir: str, schema: T.StructTyp
     batch-fixture-as-stream harness used by the tests; swap for Kafka in
     production — the downstream code is source-agnostic)."""
     return spark.readStream.schema(schema).parquet(source_dir)
-
-
-def stage_stream_dir(path: str) -> str:
-    """Stage a single Parquet FILE as a streaming source directory.
-
-    Spark's file stream source only accepts directories (a production
-    file stream watches a drop directory); single-file fixtures are
-    staged as a symlinked temp directory — hardlink/copy fallbacks
-    cover cross-device temp mounts. Directories pass through untouched.
-
-    One staging dir per source path, keyed by abspath: when the file's
-    mtime changes the STALE dir is removed and restaged (not leaked),
-    and every staged dir is removed at interpreter exit — repeated runs
-    over changing fixtures never accumulate temp dirs."""
-    import os
-    import shutil
-    import tempfile
-
-    if os.path.isdir(path):
-        return path
-    mtime = os.path.getmtime(path)
-    key = os.path.abspath(path)
-    cached = _STAGED_STREAM_DIRS.get(key)
-    if cached and cached[1] == mtime and os.path.isdir(cached[0]):
-        return cached[0]
-    if cached:
-        shutil.rmtree(cached[0], ignore_errors=True)
-    d = tempfile.mkdtemp(prefix="overpaint_stream_")
-    dst = os.path.join(d, os.path.basename(path))
-    try:
-        os.symlink(key, dst)
-    except OSError:
-        try:
-            os.link(path, dst)
-        except OSError:
-            shutil.copy2(path, dst)
-    _STAGED_STREAM_DIRS[key] = (d, mtime)
-    return d
-
-
-_STAGED_STREAM_DIRS: dict[str, tuple[str, float]] = {}
-
-
-def _cleanup_staged_stream_dirs() -> None:
-    import shutil
-
-    for d, _ in _STAGED_STREAM_DIRS.values():
-        shutil.rmtree(d, ignore_errors=True)
-    _STAGED_STREAM_DIRS.clear()
-
-
-atexit.register(_cleanup_staged_stream_dirs)
 
 
 def streaming_profile(

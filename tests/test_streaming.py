@@ -1167,26 +1167,142 @@ def test_windowed_rollup_append_mode_drops_late_beyond_horizon(spark, tmp_path):
     assert ("2024-03-01 20:00:00", "__flush__") not in rows  # never closed
 
 
-# --- r12: trailing no-data micro-batch skipped where output-neutral -------
+# --- the streaming-witness runner: start-scoped conf ---------------------
 
 
-@pytest.mark.slow
-def test_skip_no_data_batches_restores_conf_and_output(spark):
-    """The _skip_no_data_batches decorator (r12) must (a) restore the
-    session conf whatever it was, and (b) not change a decorated
-    witness's emitted relation — pinned by running stream_attribution
-    with the wrapper (no-data batch skipped) and via its undecorated
-    body (``__wrapped__`` — Spark default, trailing no-data batch
-    runs) and comparing row sets."""
+def _offset_log(ckpt):
+    """{batch_id: offset-log metadata} of a finished query's checkpoint."""
+    import json
+    import os
+
+    out = {}
+    for f in os.listdir(f"{ckpt}/offsets"):
+        if f.isdigit():
+            with open(f"{ckpt}/offsets/{f}") as fh:
+                out[int(f)] = json.loads(fh.read().splitlines()[1])
+    return out
+
+
+def test_stream_runner_scopes_conf_to_start(spark, tmp_path, monkeypatch):
+    """queries._run_stream sets the witness conf only around ``start``:
+    the session conf afterwards equals the conf before (a set key keeps
+    its value, an unset key stays unset); a watermarked append query
+    runs no trailing no-data batch unless asked to, so its windows
+    never flush; and the state-partition count derived from the input's
+    footer rows is the one the offset log pinned."""
+    import os
+
     from overpaint_spark import queries as Q
 
-    key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    fn = Q.QUERIES["stream_attribution"]
-    assert hasattr(fn, "__wrapped__"), "witness should be decorated"
+    no_data = "spark.sql.streaming.noDataMicroBatches.enabled"
+    parts = "spark.sql.shuffle.partitions"
+    src = str(tmp_path / "src")
+    spark.range(10).select(
+        F.timestamp_seconds(F.lit(1_700_000_000) + F.col("id") * 3600)
+        .alias("ts")
+    ).coalesce(1).write.parquet(src)
+    (data_file,) = [f for f in os.listdir(src) if f.endswith(".parquet")]
+    rollup = (
+        spark.readStream.schema("ts timestamp").parquet(src)
+        .withWatermark("ts", "10 minutes")
+        .groupBy(F.window("ts", "1 hour"))
+        .count()
+    )
+    # 10 footer rows at 2 rows per partition -> 5 state partitions
+    monkeypatch.setattr(Q, "_STATE_ROWS_PER_PARTITION", 2)
+    old_parts = spark.conf.get(parts)
+    try:
+        spark.conf.unset(no_data)
+        spark.conf.set(parts, "7")
+        out, ckpt = Q._run_stream(
+            spark, "runner_test",
+            lambda o, c: Q._start_file_sink(rollup, o, c),
+            state_input=f"{src}/{data_file}",
+        )
+        assert spark.conf.get(no_data, None) is None  # still unset
+        assert spark.conf.get(parts) == "7"  # restored
+        log = _offset_log(ckpt)
+        assert list(log) == [0]  # the data batch only: no no-data batch
+        assert log[0]["conf"][parts] == "5"  # derived count, pinned at start
+        assert spark.read.parquet(out).count() == 0  # no window flushed
 
-    spark.conf.set(key, "true")
-    fast = sorted(map(tuple, fn(spark, SF).collect()))
-    assert spark.conf.get(key) == "true"  # restored
+        spark.conf.set(no_data, "false")
+        out, ckpt = Q._run_stream(
+            spark, "runner_test",
+            lambda o, c: Q._start_file_sink(rollup, o, c),
+            no_data_batches=True,
+        )
+        assert spark.conf.get(no_data) == "false"  # restored
+        assert sorted(_offset_log(ckpt)) == [0, 1]  # data + no-data batch
+        assert _offset_log(ckpt)[0]["conf"][parts] == "7"  # stateless: session's
+        assert spark.read.parquet(out).count() > 0  # the flush batch emits
+    finally:
+        spark.conf.unset(no_data)
+        spark.conf.set(parts, old_parts)
 
-    slow = sorted(map(tuple, fn.__wrapped__(spark, SF).collect()))
-    assert fast == slow and len(fast) > 0
+
+def test_concurrent_stream_witnesses_keep_oracle_parity(spark):
+    """Two streaming witnesses on one session, on two driver threads,
+    must each still equal its DuckDB oracle. stream_attribution turns
+    the trailing no-data batch off; stream_events_hourly needs it to
+    flush its windows. stream_attribution runs back to back from t=0
+    while stream_events_hourly, started at t=0.5 s, runs twice (the
+    first, cold call is mostly staging; the second starts its queries
+    well inside the attribution loop). A conf held for a whole witness
+    call, not just its start, made stream_events_hourly drop every
+    window."""
+    import importlib.util
+    import os
+    import threading
+    import time
+
+    import duckdb
+
+    from overpaint_spark import queries as Q
+
+    spec = importlib.util.spec_from_file_location(
+        "oracle_check",
+        os.path.join(os.path.dirname(__file__), "..", "tools", "oracle_check.py"),
+    )
+    oc = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(oc)
+
+    got = {"stream_attribution": [], "stream_events_hourly": []}
+    done = threading.Event()
+
+    def run(name):
+        try:
+            got[name].append(Q.QUERIES[name](spark, SF).toPandas())
+        except Exception as exc:  # noqa: BLE001 - asserted below
+            got[name].append(exc)
+
+    def attribution_until_done():
+        run("stream_attribution")
+        while not done.is_set():
+            run("stream_attribution")
+
+    def events_hourly():
+        try:
+            run("stream_events_hourly")
+            run("stream_events_hourly")
+        finally:
+            done.set()
+
+    threads = [threading.Thread(target=attribution_until_done),
+               threading.Thread(target=events_hourly)]
+    threads[0].start()
+    time.sleep(0.5)
+    threads[1].start()
+    for t in threads:
+        t.join(600)
+        assert not t.is_alive()
+
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW events AS SELECT * FROM '{SF}/events.parquet'")
+    oracles = Q.oracles()
+    for name, results in got.items():
+        expected = con.sql(oracles[name]).df()
+        for res in results:
+            assert not isinstance(res, Exception), f"{name}: {res}"
+            assert len(res) > 0
+            assert oc.compare(name, res, expected) == []
