@@ -2421,8 +2421,13 @@ def _run_memory_stream(
     spark: SparkSession, name: str, agg: DataFrame, state_input: str
 ) -> DataFrame:
     """Run a complete-mode aggregate into a memory sink through
-    :func:`_run_stream` and return the drained final state. The sink's
-    query name is the (unique) basename of the run's out dir."""
+    :func:`_run_stream` and return its final state as a local relation.
+    The sink's query name is the (unique) basename of the run's out
+    dir, and the sink view is DROPPED after the collect: per-run views
+    would otherwise accumulate in the session catalog (and driver
+    memory) for the lifetime of a long-lived session that keeps
+    invoking the streaming queries. The results are tiny by
+    construction (complete-mode aggregates over small dimensions)."""
 
     def start(out_dir: str, ckpt_dir: str):
         return (
@@ -2435,7 +2440,11 @@ def _run_memory_stream(
         )
 
     out_dir, _ = _run_stream(spark, name, start, state_input=state_input)
-    return _drain_memory_sink(spark, os.path.basename(out_dir))
+    sink = os.path.basename(out_dir)
+    table = spark.table(sink)
+    rows, schema = table.collect(), table.schema
+    spark.catalog.dropTempView(sink)
+    return _local_df(spark, rows, schema)
 
 
 def _start_file_sink(df: DataFrame, out_dir: str, ckpt_dir: str):
@@ -8356,19 +8365,6 @@ def q_stream_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _run_memory_stream(
         spark, "stream_corpus_stats", agg, f"{sf_dir}/documents.parquet"
     )
-
-
-def _drain_memory_sink(spark: SparkSession, sink: str) -> DataFrame:
-    """Materialize a completed memory-sink table as a local relation and
-    DROP the sink view: the per-run tables would otherwise accumulate
-    in the session catalog (and driver memory) for the lifetime of a
-    long-lived session that keeps invoking the streaming queries. The
-    results are tiny by construction (complete-mode aggregates over
-    small dimensions)."""
-    table = spark.table(sink)
-    rows, schema = table.collect(), table.schema
-    spark.catalog.dropTempView(sink)
-    return _local_df(spark, rows, schema)
 
 
 def _oracle_corpus_source_stats() -> str:
